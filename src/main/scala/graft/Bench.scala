@@ -163,8 +163,11 @@ object Bench {
     // One full measurement pass: times every query with the mid-run control
     // series interleaved. A pass is self-contained (its own start/mid/end
     // probes) so a retry's artifact has one coherent measurement context.
-    def measurePass(): (Seq[(String, Double, Double)], Vector[Double]) = {
+    def measurePass(): (Seq[(String, Double, Double)], Vector[Double], Map[String, String]) = {
       val controlStart = controlProbe()
+      // query -> exception class of every query that threw: its time still
+      // reads as a result below, so the JSON names it as a failure
+      val failed = scala.collection.mutable.LinkedHashMap[String, String]()
       // Mid-run control series: start/end probes alone miss the host's
       // INTERMITTENT stall windows (round-6's driver run had 2.6-42x
       // per-query inflation that only an idle rerun exposed; a window can
@@ -205,11 +208,14 @@ object Bench {
           graft.queries.TableOps.reclaimTempDirs()
           graft.queries.FixtureClock.reset()
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+          try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+            failed(name) = e.getClass.getName
+            -1L
+          }
           (name, (System.nanoTime() - t0) / 1e9, graft.queries.FixtureClock.sec)
         }
       controls += controlProbe()
-      (results, controls.toVector)
+      (results, controls.toVector, failed.toMap)
     }
     def hostFactorOf(controls: Vector[Double]): (Double, Double) = {
       val sorted = controls.sorted
@@ -240,7 +246,7 @@ object Bench {
     // artifact can never silently record a stalled capture as clean.
     val maxAttempts = 2
     var attempt = 1
-    var (results, controls) = measurePass()
+    var (results, controls, failed) = measurePass()
     var (hostFactor, median) = hostFactorOf(controls)
     var suspects = suspectsOf(results, spikedSegments(controls, median))
     while ((hostFactor > 1.8 || suspects.nonEmpty) && attempt < maxAttempts) {
@@ -248,8 +254,8 @@ object Bench {
         s"bench attempt $attempt polluted (host_factor=$hostFactor, " +
           s"${suspects.size} stall suspects) — retrying on warm JVM")
       attempt += 1
-      val (r2, c2) = measurePass()
-      results = r2; controls = c2
+      val (r2, c2, f2) = measurePass()
+      results = r2; controls = c2; failed = f2
       val (h2, m2) = hostFactorOf(controls)
       hostFactor = h2; median = m2
       suspects = suspectsOf(results, spikedSegments(controls, median))
@@ -291,6 +297,8 @@ object Bench {
       if (suspects.size <= 60) suspects
       else suspects.take(60) :+ s"+${suspects.size - 60}_more"
     val sus = capped.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val fails = failed.toSeq.sorted.map { case (k, c) => "\"" + k + "\":\"" + c + "\"" }
+      .mkString("{", ",", "}")
     val verdict =
       if (polluted) s""","verdict":"polluted — rerun","attempts":$attempt"""
       else s""","verdict":"clean","attempts":$attempt"""
@@ -324,7 +332,7 @@ object Bench {
         }
       } else headRef.take(12)
     } catch { case scala.util.control.NonFatal(_) => "unknown" }
-    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"fixture_sec":$fx,"control_start_sec":${fmt(controls.head)},"control_end_sec":${fmt(controls.last)},"controls":$ctl,"host_factor":${fmt(hostFactor)},"stall_suspects":$sus,"captured_at":"$capturedAt","git_head":"$gitHead","sf":"$sfDir"$filter$verdict}"""
+    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$qs,"fixture_sec":$fx,"control_start_sec":${fmt(controls.head)},"control_end_sec":${fmt(controls.last)},"controls":$ctl,"host_factor":${fmt(hostFactor)},"stall_suspects":$sus,"failed":$fails,"captured_at":"$capturedAt","git_head":"$gitHead","sf":"$sfDir"$filter$verdict}"""
     println(fullJson)
     // Persist the full line to a FILE as well (round-9 verdict #6): the
     // driver's log-tail capture truncates the ~165-query map (BENCH_r09
@@ -409,7 +417,7 @@ object Bench {
     // contains a complete parseable summary (total / n / host_factor /
     // suspect count / verdict), so a round gate is never blind on the
     // headline even when the per-query map is lost.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"host_factor":${fmt(hostFactor)},"n_stall_suspects":${suspects.size},"summary_of":"full JSON on previous line","sf":"$sfDir"$filter$verdict}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"host_factor":${fmt(hostFactor)},"n_stall_suspects":${suspects.size},"n_failed":${failed.size},"summary_of":"full JSON on previous line","sf":"$sfDir"$filter$verdict}""")
     spark.stop()
     // Exit nonzero AFTER printing (round-8 verdict #1): the driver still
     // records the numbers, but a stalled capture can never again be

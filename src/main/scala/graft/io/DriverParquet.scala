@@ -1,15 +1,21 @@
 package graft.io
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.Row
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.variant.VariantExpressionEvalUtils
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils, ParquetWriteSupport}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import scala.collection.mutable
 
 /** Driver-side parquet writer for SMALL, DRIVER-LOCAL appends (opt guide
   * §1.2 / §5): the per-append Spark write of a pinned micro-batch frame is
@@ -17,43 +23,29 @@ import org.apache.spark.sql.types._
   * task init, commit-protocol renames — whose fixed cost dwarfs the KBs it
   * writes, and the crawl loops pay it several times PER micro-batch. When
   * the append's plan is provably driver-resident (every leaf a
-  * LocalRelation) and its types/partition values are in the
-  * exactly-mirrorable set below, the rows are written straight to parquet
-  * files on the driver with the SAME physical/logical types, directory
-  * layout and footer-statistics machinery (parquet-mr column writers —
-  * the identical code Spark's own parquet writer runs on executors), so
-  * the manifest stats, pruning behavior and read-back values are
-  * indistinguishable from the job path. DriverWriteParitySpec pins that
-  * file-by-file. Production-sized appends keep the distributed write: the
+  * LocalRelation), its rows are written on the driver by Spark's OWN
+  * parquet write pieces: the Hadoop conf is prepared by
+  * `ParquetUtils.prepareWrite` (write support, timestamp encoding, legacy
+  * flag, field ids and the session's codec, as for a job write), each file
+  * is written from the plan's InternalRows by `ParquetWriteSupport`, and
+  * partition directories are named by FileFormatWriter's rule. A
+  * driver-written file is therefore of the same kind as an executor-written
+  * one for every type and partition value by construction;
+  * DriverWriteParitySpec pins it file-by-file. The one executor writer this
+  * cannot reproduce is variant shredding, so schemas with a VARIANT keep the
+  * job path. Production-sized appends keep the distributed write: the
   * decision is on BYTES and ROWS (conf `graft.write.driver-max-bytes`,
-  * default 8 MB; rows capped by the broadcast-row budget), both
+  * default 8 MB; `graft.write.driver-max-rows`, default 100k), both
   * data-derived, never core-count-tuned.
   */
 object DriverParquet {
 
-  /** Types this writer mirrors bit-exactly against Spark's parquet writer:
-    * plain primitives and strings/binary. Timestamps, dates and decimals
-    * are deliberately excluded (zone/encoding games live there) — appends
-    * carrying them keep the Spark write.
-    */
-  def eligibleTypes(schema: StructType): Boolean =
-    schema.fields.forall(_.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | StringType | BooleanType | BinaryType => true
-      case _ => false
-    })
-
-  /** Partition FIELD names must survive the directory round-trip without
-    * escaping (the writer mirrors Spark's layout only on the unescaped
-    * alphabet).
-    */
-  def safeName(s: String): Boolean =
-    s.nonEmpty && s.forall(c => c.isLetterOrDigit && c < 0x80 || c == '_' || c == '-' || c == '.')
-
   /** Is every leaf of this plan a LocalRelation (the pinned batch plane),
     * reached only through driver-safe operators? Such a plan's collect is
     * a small single-task job at most — the cost class the append already
-    * pays for its source — so hoisting it to the driver is sound.
+    * pays for its source — so hoisting it to the driver is sound. `Join`
+    * and `Generate` can expand their input, which is why [[tryWrite]]'s
+    * collect is itself row-bounded.
     */
   def isLocalPlan(p: LogicalPlan): Boolean = p match {
     case _: LocalRelation => true
@@ -64,159 +56,89 @@ object DriverParquet {
     case _ => false
   }
 
-  /** Render one partition VALUE to its directory token, mirroring Spark's
-    * dynamic-partition naming for the restricted value set; None = a value
-    * outside the mirrorable set (caller falls back to the Spark write).
-    * Null and the empty string both land in the Hive default partition —
-    * Spark's own rule.
-    */
-  private def partToken(v: Any): Option[String] = v match {
-    case null => Some("__HIVE_DEFAULT_PARTITION__")
-    case s: String =>
-      if (s.isEmpty) Some("__HIVE_DEFAULT_PARTITION__")
-      else if (safeName(s)) Some(s)
-      else None
-    case l: Long => Some(l.toString)
-    case i: Int => Some(i.toString)
-    case sh: Short => Some(sh.toString)
-    case b: Byte => Some(b.toString)
-    case b: Boolean => Some(b.toString)
-    case _ => None
+  /** A parquet-mr writer over an NIO file, fed by Spark's write support. */
+  private final class RowWriterBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override def self(): RowWriterBuilder = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport()
   }
 
-  /** The parquet MessageType Spark's SparkToParquetSchemaConverter would
-    * produce for this (restricted) schema — same physical types and
-    * logical annotations, so the vectorized reader, the footer-stats
-    * decode and the driver bloom reader all see files identical in kind
-    * to job-written ones.
+  /** Write `df`'s rows (its last columns are the partition values named
+    * `partDirNames`, the ones before them the data) under `writeDir` in Spark's
+    * dynamic-partition layout. File sizing honors BOTH `maxRecordsPerFile`
+    * (the TARGET_FILE_SIZE contract) and `advisoryBytes` (the AQE rebalance
+    * contract the distributed path keeps: a hot partition value fans out
+    * across files instead of concentrating in one — GraftTableSpec pins
+    * it). Returns false — having written NOTHING — when the rows exceed
+    * `maxRows` or their bytes exceed `maxBytes`, so the caller can fall back
+    * to the Spark write; at most `maxRows + 1` rows are ever collected.
     */
-  private def messageTypeOf(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
-      val t = f.dataType match {
-        case ByteType => Types.primitive(PrimitiveTypeName.INT32, rep)
-          .as(LogicalTypeAnnotation.intType(8, true)).named(f.name)
-        case ShortType => Types.primitive(PrimitiveTypeName.INT32, rep)
-          .as(LogicalTypeAnnotation.intType(16, true)).named(f.name)
-        case IntegerType => Types.primitive(PrimitiveTypeName.INT32, rep).named(f.name)
-        case LongType => Types.primitive(PrimitiveTypeName.INT64, rep).named(f.name)
-        case FloatType => Types.primitive(PrimitiveTypeName.FLOAT, rep).named(f.name)
-        case DoubleType => Types.primitive(PrimitiveTypeName.DOUBLE, rep).named(f.name)
-        case BooleanType => Types.primitive(PrimitiveTypeName.BOOLEAN, rep).named(f.name)
-        case StringType => Types.primitive(PrimitiveTypeName.BINARY, rep)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name)
-        case BinaryType => Types.primitive(PrimitiveTypeName.BINARY, rep).named(f.name)
-        case other => sys.error(s"DriverParquet: ineligible type $other")
-      }
-      b.addField(t)
-    }
-    b.named("spark_schema")
-  }
-
-  private def rowBytes(r: Row, dts: Array[DataType]): Long = {
-    var total = 16L
-    var i = 0
-    while (i < dts.length) {
-      dts(i) match {
-        case StringType => val v = r.get(i); if (v != null) total += v.asInstanceOf[String].length + 8
-        case BinaryType => val v = r.get(i); if (v != null) total += v.asInstanceOf[Array[Byte]].length + 8
-        case _ => total += 8
-      }
-      i += 1
-    }
-    total
-  }
-
-  /** Write `rows` (data columns followed by the partition-value columns)
-    * under `writeDir` in Spark's dynamic-partition layout. File sizing
-    * honors BOTH `maxRecordsPerFile` (the TARGET_FILE_SIZE contract) and
-    * `advisoryBytes` (the AQE rebalance contract the distributed path
-    * keeps: a hot partition value fans out across files instead of
-    * concentrating in one — GraftTableSpec pins it). Returns false —
-    * having written NOTHING — when any row/value/size check fails, so the
-    * caller can fall back to the Spark write.
-    */
-  def tryWrite(rows: Array[Row], schema: StructType, partDirNames: Seq[String],
+  def tryWrite(df: DataFrame, partDirNames: Seq[String],
                writeDir: String, maxRecordsPerFile: Option[Long],
-               advisoryBytes: Long, maxBytes: Long, maxRows: Long,
-               conf: Configuration): Boolean = {
-    if (!eligibleTypes(schema)) return false
-    if (rows.length > maxRows) return false
-    val dts = schema.fields.map(_.dataType)
-    if (rows.iterator.map(rowBytes(_, dts)).sum > maxBytes) return false
-    val nData = schema.fields.length
-    // group by rendered partition path; any unrenderable value aborts
-    val grouped = scala.collection.mutable.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Row]]()
-    rows.foreach { r =>
-      val toks = partDirNames.indices.map { k =>
-        partToken(r.get(nData + k)) match {
-          case Some(t) => s"${partDirNames(k)}=$t"
-          case None => return false
-        }
-      }
-      grouped.getOrElseUpdate(toks.mkString("/"), scala.collection.mutable.ArrayBuffer[Row]()) += r
+               advisoryBytes: Long, maxBytes: Long, maxRows: Long): Boolean = {
+    val sqlConf = df.sparkSession.sessionState.conf
+    val schema = df.schema
+    val nData = schema.length - partDirNames.length
+    val dataSchema = StructType(schema.fields.take(nData))
+    if (VariantExpressionEvalUtils.typeContainsVariant(dataSchema)) return false
+    val cap = math.min(maxRows, Int.MaxValue - 1L).toInt
+    val taken = df.queryExecution.executedPlan.executeTake(cap + 1)
+    if (taken.length > cap) return false
+    lazy val toUnsafe = UnsafeProjection.create(schema)
+    val rows = taken.map {
+      case u: UnsafeRow => u
+      case r => toUnsafe(r).copy()
     }
-    val msg = messageTypeOf(schema)
-    val writeConf = new Configuration(conf)
-    GroupWriteSupport.setSchema(msg, writeConf)
-    val factory = new SimpleGroupFactory(msg)
+    if (rows.iterator.map(_.getSizeInBytes.toLong).sum > maxBytes) return false
+
+    // FileFormatWriter's directory rule: name=escaped(cast(value as string))
+    val tz = Some(sqlConf.sessionLocalTimeZone)
+    val partStrings = partDirNames.indices.map(k =>
+      Cast(BoundReference(nData + k, schema(nData + k).dataType, nullable = true), StringType, tz))
+    val grouped = mutable.LinkedHashMap[String, mutable.ArrayBuffer[UnsafeRow]]()
+    rows.foreach { r =>
+      val rel = partDirNames.indices.map { k =>
+        ExternalCatalogUtils.getPartitionPathString(
+          partDirNames(k), Option(partStrings(k).eval(r)).map(_.toString).orNull)
+      }.mkString("/")
+      grouped.getOrElseUpdate(rel, mutable.ArrayBuffer[UnsafeRow]()) += r
+    }
+
+    val job = Job.getInstance(df.sparkSession.sessionState.newHadoopConf())
+    ParquetUtils.prepareWrite(sqlConf, job, dataSchema, new ParquetOptions(Map.empty[String, String], sqlConf))
+    val writeConf = job.getConfiguration
+    val codec = CompressionCodecName.fromConf(writeConf.get(ParquetOutputFormat.COMPRESSION))
+    val dataRow = ProjectingInternalRow(dataSchema, 0 until nData)
     val maxRecs = maxRecordsPerFile.filter(_ > 0).getOrElse(Long.MaxValue)
-    grouped.foreach { case (rel, rs) =>
-      val dir = if (rel.isEmpty) writeDir else s"$writeDir/$rel"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      // greedy size-bounded chunks: ≥1 row each, cut at either contract
-      val chunks = scala.collection.mutable.ArrayBuffer[Seq[Row]]()
-      var cur = scala.collection.mutable.ArrayBuffer[Row]()
-      var curBytes = 0L
-      rs.foreach { r =>
-        val b = rowBytes(r, dts)
-        if (cur.nonEmpty && (curBytes + b > advisoryBytes || cur.length >= maxRecs)) {
-          chunks += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer[Row](); curBytes = 0L
-        }
-        cur += r; curBytes += b
-      }
-      if (cur.nonEmpty) chunks += cur.toSeq
-      chunks.zipWithIndex.foreach { case (chunk, ci) =>
-        // NIO output, not a Hadoop Path: this writer only ever targets the
-        // driver's local filesystem (the method already creates `dir` via
-        // java.nio above), and Hadoop's ChecksumFileSystem layer costs
-        // ~10x per small file (measured 10.7 vs 1.0 ms/file) writing .crc
-        // sidecars every reader and listing filter ignores (dot-prefixed).
-        // The parquet bytes come from the same parquet-mr column writers
-        // either way — DriverWriteParitySpec pins the file-level identity.
-        val file = new org.apache.parquet.io.LocalOutputFile(
-          java.nio.file.Paths.get(
-            s"$dir/part-${"%05d".format(ci)}-${java.util.UUID.randomUUID()}.parquet"))
-        val writer = ExampleParquetWriter.builder(file)
-          .withConf(writeConf)
-          .withType(msg)
-          .withCompressionCodec(CompressionCodecName.SNAPPY)
-          .build()
-        try {
-          chunk.foreach { r =>
-            val g = factory.newGroup()
-            var i = 0
-            while (i < nData) {
-              val v = r.get(i)
-              if (v != null) schema.fields(i).dataType match {
-                case ByteType => g.add(i, v.asInstanceOf[Byte].toInt)
-                case ShortType => g.add(i, v.asInstanceOf[Short].toInt)
-                case IntegerType => g.add(i, v.asInstanceOf[Int])
-                case LongType => g.add(i, v.asInstanceOf[Long])
-                case FloatType => g.add(i, v.asInstanceOf[Float])
-                case DoubleType => g.add(i, v.asInstanceOf[Double])
-                case BooleanType => g.add(i, v.asInstanceOf[Boolean])
-                case StringType => g.add(i, v.asInstanceOf[String])
-                case BinaryType =>
-                  g.add(i, Binary.fromConstantByteArray(v.asInstanceOf[Array[Byte]]))
-                case other => sys.error(s"DriverParquet: ineligible type $other")
-              }
-              i += 1
-            }
-            writer.write(g)
+    // ParquetWriteSupport reads its datetime rebase mode from SQLConf.get
+    SQLConf.withExistingConf(sqlConf) {
+      grouped.foreach { case (rel, rs) =>
+        val dir = if (rel.isEmpty) writeDir else s"$writeDir/$rel"
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+        // greedy size-bounded chunks: ≥1 row each, cut at either contract
+        val chunks = mutable.ArrayBuffer[mutable.ArrayBuffer[UnsafeRow]]()
+        var cur = mutable.ArrayBuffer[UnsafeRow]()
+        var curBytes = 0L
+        rs.foreach { r =>
+          val b = r.getSizeInBytes.toLong
+          if (cur.nonEmpty && (curBytes + b > advisoryBytes || cur.length >= maxRecs)) {
+            chunks += cur; cur = mutable.ArrayBuffer[UnsafeRow](); curBytes = 0L
           }
-        } finally writer.close()
+          cur += r; curBytes += b
+        }
+        if (cur.nonEmpty) chunks += cur
+        chunks.zipWithIndex.foreach { case (chunk, ci) =>
+          // NIO output, not a Hadoop Path: this writer only ever targets the
+          // driver's local filesystem, and Hadoop's ChecksumFileSystem layer
+          // costs ~10x per small file (measured 10.7 vs 1.0 ms/file) writing
+          // .crc sidecars every reader and listing filter ignores.
+          val file = new LocalOutputFile(java.nio.file.Paths.get(
+            s"$dir/part-${"%05d".format(ci)}-${java.util.UUID.randomUUID()}${codec.getExtension}.parquet"))
+          val writer = new RowWriterBuilder(file).withConf(writeConf).withCompressionCodec(codec).build()
+          try chunk.foreach { r => dataRow.project(r); writer.write(dataRow) }
+          finally writer.close()
+        }
       }
     }
     true

@@ -118,12 +118,10 @@ object GraftWriter {
       // of a pinned batch frame pays a whole Spark write job — source
       // task, exchange, parquet task init, commit-protocol renames — for
       // KBs of data, several times per batch across the crawl loops. When
-      // the plan is provably driver-resident (all leaves LocalRelation)
-      // and types/partition values are in [[graft.io.DriverParquet]]'s
-      // exactly-mirrorable set, the rows are written to parquet on the
-      // driver through the same parquet-mr machinery the executor path
-      // uses (same physical/logical types, layout and footer stats —
-      // DriverWriteParitySpec pins it); everything downstream
+      // the plan is provably driver-resident (all leaves LocalRelation),
+      // [[graft.io.DriverParquet]] writes the rows on the driver with
+      // Spark's own parquet writer, for any type and partition value,
+      // under a row cap and a byte cap; everything downstream
       // (collectDataFiles, stats, blooms) is the unchanged common path.
       // Bytes/rows cutovers are data-derived confs; production appends
       // keep the distributed write.
@@ -132,17 +130,13 @@ object GraftWriter {
         .getOrElse(8L * 1024 * 1024)
       val driverWritten =
         driverMaxBytes > 0 && clusterBy.isEmpty &&
-        graft.io.DriverParquet.eligibleTypes(schema) &&
-        spec.fields.forall(pf => graft.io.DriverParquet.safeName(pf.name)) &&
         graft.io.DriverParquet.isLocalPlan(withParts.queryExecution.optimizedPlan) && {
-          val rows = withParts.collect()
           val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
             spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-          graft.io.DriverParquet.tryWrite(rows, schema, partNames, writeDir,
+          graft.io.DriverParquet.tryWrite(withParts, partNames, writeDir,
             maxRecordsPerFile(meta), advisory, driverMaxBytes,
             spark.conf.getOption("graft.write.driver-max-rows").map(_.toLong)
-              .getOrElse(100000L),
-            spark.sparkContext.hadoopConfiguration)
+              .getOrElse(100000L))
         }
       if (!driverWritten) {
         var writer = arranged.write.mode("append")
